@@ -25,6 +25,9 @@ object Bench {
     // right estimator, and min-of-3 rides out single-run load spikes that
     // min-of-2 recorded verbatim in rounds 2-3.
     val failed = scala.collection.mutable.ArrayBuffer[String]()
+    // why each name in `failed` failed: exception class and the first line
+    // of its message, from the query's first failing run
+    val failures = scala.collection.mutable.LinkedHashMap[String, (String, String)]()
     // Opt-in subset (SPARK_GRAFT_BENCH_ONLY="q138,q136_triangles,..."):
     // time only the queries whose name starts with one of the
     // comma-separated prefixes — the scale-validation loop (several
@@ -76,7 +79,12 @@ object Bench {
       // their [min, median] digest
       def once(): Option[(Double, Double)] = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => return None }
+        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+          failures.getOrElseUpdate(name, (e.getClass.getName,
+            Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+              .getOrElse("")))
+          return None
+        }
         Some(((System.nanoTime() - t0) / 1e9, loadavg()))
       }
       val reps = for (_ <- once(); a <- once(); b <- once(); c <- once())
@@ -202,6 +210,9 @@ object Bench {
     // into the total, which would silently shrink (improve) it.
     val total = results.flatMap(_._2.map(_._1)).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failuresJson = failures.map { case (k, (cls, msg)) =>
+      s"${jsonStr(k)}:{\"class\":${jsonStr(cls)},\"message\":${jsonStr(msg)}}"
+    }.mkString("{", ",", "}")
     val loadAfter = loadavg()
     // Complete per-query [min, median] record — median − min is host noise,
     // min is plan cost — goes to a repo file; the stdout contract line below
@@ -232,7 +243,7 @@ object Bench {
     }.mkString("[", ",", "]")
     try {
       val w = new java.io.PrintWriter(detailPath)
-      try w.println(s"""{"unit":"sec","min_median":$detail,"reps_sec_load":$repsJson,"load1m_after_query":$loadTrace,"high_load_suspect":$highLoad,"load1m_suspect_threshold":$loadThreshold,"failed":$failedJson,"load1m":[${fmt(loadBefore)},${fmt(loadAfter)}],"sf":"$sfDir"$subsetJson$provJson$soloJson}""")
+      try w.println(s"""{"unit":"sec","min_median":$detail,"reps_sec_load":$repsJson,"load1m_after_query":$loadTrace,"high_load_suspect":$highLoad,"load1m_suspect_threshold":$loadThreshold,"failed":$failedJson,"failures":$failuresJson,"load1m":[${fmt(loadBefore)},${fmt(loadAfter)}],"sf":"$sfDir"$subsetJson$provJson$soloJson}""")
       finally w.close()
     } catch { case _: Throwable => () } // detail file is best-effort
     // The driver reads this line from a bounded tail buffer (~1.8 KB,

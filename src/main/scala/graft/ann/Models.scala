@@ -65,22 +65,29 @@ object Models {
     * plus every hyperparameter; `stamp` carries only the corpus
     * fingerprint.
     *
-    * CONTRACT: `train` must NOT call cachedLatest (directly or through
-    * [[graft.queries.SharedFrames.sharedFrame]]) — the registry is one
-    * ConcurrentHashMap and `compute` forbids reentrant updates
-    * (IllegalStateException("Recursive update"), and only once the map is
-    * populated enough to collide bins — a latent failure, not a loud one).
-    * Resolve nested models BEFORE entering the outer gate, as
+    * `train` must NOT call cachedLatest (directly or through
+    * [[graft.queries.SharedFrames.sharedFrame]]): the registry is one
+    * ConcurrentHashMap, whose `compute` forbids reentrant updates and
+    * detects them only when the two keys share a hash bin. A per-thread
+    * guard rejects every nested call instead, whatever the keys. Resolve
+    * nested models BEFORE entering the outer gate, as
     * [[graft.queries.Semantic.memberFrame]] does. */
   def cachedLatest[T <: AnyRef](baseKey: String, stamp: String,
-      onEvict: T => Unit = (_: T) => ())(train: => T): T =
+      onEvict: T => Unit = (_: T) => ())(train: => T): T = {
+    if (building.get != null) throw new IllegalStateException(
+      s"cachedLatest($baseKey) called inside the build of cachedLatest(${building.get})")
     latest.compute(baseKey, (_, prev) =>
       if (prev != null && prev._1 == stamp) prev
       else {
         if (prev != null) onEvict(prev._2.asInstanceOf[T])
-        (stamp, train)
+        building.set(baseKey)
+        try (stamp, train) finally building.remove()
       }
     )._2.asInstanceOf[T]
+  }
+
+  // the key whose `train` runs on this thread, or null
+  private val building = new ThreadLocal[String]
 }
 
 /** Build-once path scheme shared by the persisted index families

@@ -390,8 +390,8 @@ object Dedup {
     * emission is the wrong tool for those; they route to the cluster-level
     * connected-components pass (q58/q131 family), and this operator emits
     * the pairs discoverable through at least one SPARSE bucket, bounding
-    * the SKEW term of the candidate mass at cap²/2 per bucket. The
-    * tools/BucketProbe census shows the cutoff is a GUARD, not a speedup,
+    * the SKEW term of the candidate mass at cap²/2 per bucket. A per-bucket
+    * size census (r13) shows the cutoff is a GUARD, not a speedup,
     * at measured scales: at ×64 (320k docs, j = 2) dense buckets hold
     * only 2.06M of 628M candidate pairs (0.3% — max bucket 368), and the
     * pipeline is SHUFFLE-BOUND on exploded rows (j = 3 at ×64 measures

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.Checkpoints
+import graft.operators.{Checkpoints, Fixpoint}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,15 +55,15 @@ object Graph {
     * at holds the constant 150000 from round 1 on (1e6 in round 0), so its
     * value rides as a coalesce DEFAULT instead of |V| join rows per round —
     * the frame is bounded by the pointed-at set, and the per-round plan is
-    * exactly one join + one map-combined aggregate. Rounds materialize via
-    * eager scratch checkpoints (the [[graft.operators.Checkpoints]]
-    * discipline) so each round's measured size feeds the next round's join
-    * planning WITHOUT stranding CacheManager entries; each retired round's
-    * blocks are freed the moment the round that read them has itself
-    * materialized (localCheckpoint preserves the hash(src) layout in the
-    * LogicalRDD, so the per-round join still reuses the partitioning).
-    * The returned lazy plan reads only the edge and final-round
-    * checkpoints, whose blocks die with the result reference. */
+    * exactly one join + one map-combined aggregate. Rounds run through
+    * [[graft.operators.Fixpoint]]: each materializes as an eager scratch
+    * checkpoint, so its measured size feeds the next round's join planning
+    * WITHOUT stranding CacheManager entries, and is freed the moment the
+    * round that read it has itself materialized (localCheckpoint preserves
+    * the hash(src) layout in the LogicalRDD, so the per-round join still
+    * reuses the partitioning). The returned lazy plan reads only the edge
+    * and final-round checkpoints, whose blocks die with the result
+    * reference. */
   def pageRank(rawEdges: DataFrame, rounds: Int): DataFrame =
     pageRankSeeded(rawEdges, rounds, seed = None)
 
@@ -79,7 +79,7 @@ object Graph {
     * the coalesce default and the aggregate's base term), so the
     * personalized variant costs exactly the uniform one. */
   def pageRankSeeded(rawEdges: DataFrame, rounds: Int,
-      seed: Option[Column => Column]): DataFrame = {
+      seed: Option[Column => Column]): DataFrame = Fixpoint.run { fp =>
     val seeded = seed.isDefined
     // the seed indicator (an md5 bucket — a string digest per evaluation)
     // is computed ONCE into the checkpointed edge frame and carried as
@@ -90,7 +90,7 @@ object Graph {
     val enrich: DataFrame => DataFrame = df => seed.fold(df)(s =>
       df.withColumn("seed_src", s(col("src")))
         .withColumn("seed_dst", s(col("dst"))))
-    val edges = Checkpoints.scratch(enrich(rawEdges
+    val edges = fp.scratch(enrich(rawEdges
       .join(rawEdges.groupBy("src").agg(sum("wt").as("wout")), "src"))
       .repartition(col("src")))
     val initSrc =
@@ -99,19 +99,14 @@ object Graph {
     val baseSrc =
       if (seeded) when(col("seed_src"), lit(150000L)).otherwise(lit(0L))
       else lit(150000L)
-    var ranks: DataFrame = null
-    for (i <- 1 to rounds) {
-      val joined =
-        if (i == 1) edges.withColumn("r", initSrc)
-        else edges
-          .join(ranks.select(col("node").as("src"), col("r")), Seq("src"), "left")
-          .withColumn("r", coalesce(col("r"), baseSrc))
-      val contribCols =
-        Seq(col("dst").as("node"),
-          expr("850000 * r * wt div (1000000 * wout)").as("c")) ++
-          (if (seeded) Seq(col("seed_dst").as("sd")) else Nil)
+    val contribCols =
+      Seq(col("dst").as("node"),
+        expr("850000 * r * wt div (1000000 * wout)").as("c")) ++
+        (if (seeded) Seq(col("seed_dst").as("sd")) else Nil)
+    // one round: aggregate the contributions of the rank-annotated edges
+    def round(joined: DataFrame): DataFrame = {
       val agged = joined.select(contribCols: _*)
-      val next = Checkpoints.scratch(
+      fp.scratch(
         if (seeded)
           agged.groupBy("node")
             .agg(sum("c").as("csum"), max("sd").as("sd"))
@@ -120,13 +115,14 @@ object Graph {
                 col("csum")).as("r"))
         else
           agged.groupBy("node").agg((lit(150000L) + sum("c")).as("r")))
-      // `next` is materialized, so the previous round's snapshot can never
-      // be read again — free its blocks now, not at some future GC
-      if (ranks != null)
-        Checkpoints.rddOf(ranks).foreach(_.unpersist(blocking = false))
-      ranks = next
     }
-    if (seeded) {
+    // round 1 reads the initial ranks off the edges themselves
+    val ranks = fp.loop(rounds - 1)(round(edges.withColumn("r", initSrc))) {
+      (prev, _) => Some(round(edges
+        .join(prev.select(col("node").as("src"), col("r")), Seq("src"), "left")
+        .withColumn("r", coalesce(col("r"), baseSrc))))
+    }
+    fp.keep(if (seeded) {
       // node universe WITH its (functionally dependent) seed flag, so the
       // never-pointed-at default needs no md5 re-evaluation either
       val nodes = edges.select(col("src").as("node"), col("seed_src").as("sf"))
@@ -140,7 +136,7 @@ object Graph {
         .union(edges.select(col("dst").as("node"))).distinct()
       nodes.join(ranks, Seq("node"), "left")
         .select(col("node"), coalesce(col("r"), lit(150000L)).as("r"))
-    }
+    })
   }
 
   // (okey, ln) is NOT unique in the fixture — the transition sequence in
@@ -262,14 +258,18 @@ object Graph {
     * restarted session via `sessionUUID` in the key. Built FROM the shared
     * [[SharedFrames.basketItems]] frame, so a session mixing basket-mining
     * and graph queries pays the corpus scan + distinct exactly once. */
-  private def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
+  private def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
+    // resolved outside the build, re-cached only on a rebuild
+    // (SharedFrames.registered)
+    val basket = SharedFrames.basketEntry(spark, dir)
     SharedFrames.sharedFrame(spark, dir, "lineitem", "copurchase-edges") {
-      val items = SharedFrames.basketItems(spark, dir)
+      val items = SharedFrames.repersisted(basket)
       items.select(col("okey"), col("part").as("a"))
         .join(items.select(col("okey").as("okey_b"), col("part").as("b")),
           col("okey") === col("okey_b") && col("a") < col("b"))
         .select("a", "b").distinct()
     }
+  }
 
   /** q136 triangle counting with degree orientation — the graph kernel
     * behind clustering-coefficient quality signals on web/link corpora.
@@ -413,8 +413,9 @@ object Graph {
     * final rounds are cheap no-change passes), each round one edges⋈dist
     * hash join + one map-combined min aggregate, the same
     * bounded-per-round shape as [[pageRank]]: no frontier queue on the
-    * driver, rounds materialized via localCheckpoint-free persist/count so
-    * retired rounds release immediately. Unreached vertices report -1.
+    * driver; rounds run through [[graft.operators.Fixpoint]], which frees
+    * each round once the next has materialized. Unreached vertices report
+    * -1.
     * The oracle unrolls the identical rounds as chained CTEs. */
   def q138(spark: SparkSession, dir: String): DataFrame =
     bfsHops(coPurchaseEdges(spark, dir), rounds = 6)
@@ -435,9 +436,7 @@ object Graph {
     *    carry-forward join), so carrying lineage doubles the analyzed plan
     *    every round and cache-lookup canonicalization goes exponential in
     *    the round count — the cost was driver-side planning, not
-    *    execution. Retired rounds' checkpoint RDDs are freed explicitly
-    *    ([[graft.operators.Checkpoints]]), the ConnectedComponents
-    *    discipline.
+    *    execution.
     *  - Only the FRONTIER (nodes first settled in the previous round)
     *    propagates, not the whole settled set. Identical labels: in
     *    single-source level-synchronous BFS an unsettled vertex can only
@@ -445,7 +444,7 @@ object Graph {
     *    would have settled it a round earlier), so the min over all
     *    settled neighbors IS the frontier min — and the per-round join
     *    shrinks from |E|⋈|V| to the frontier's incident edges. */
-  def bfsHops(edges: DataFrame, rounds: Int): DataFrame = {
+  def bfsHops(edges: DataFrame, rounds: Int): DataFrame = Fixpoint.run { fp =>
     // cached hash(u): the per-round frontier join keys on u, so the cache's
     // partitioning is reused every round and only the frontier moves —
     // the q124 PageRank edge-cache discipline
@@ -453,24 +452,20 @@ object Graph {
     // and a persist() stores it as compressed columnar CachedBatches that
     // pay decompression on every round's read (r16 probe: the per-round
     // frontier-join jobs carried 5–6 s of task time against a 24 MB
-    // cache); the checkpoint stores raw rows, keeps the hash(u) layout in
-    // the LogicalRDD (the pageRank edge-cache discipline), and its blocks
-    // are swept at the query boundary like every other scratch frame.
-    val sym = graft.operators.Checkpoints.scratch(
+    // cache); the checkpoint stores raw rows and keeps the hash(u) layout
+    // in the LogicalRDD (the pageRank edge-cache discipline).
+    val sym = fp.scratch(
       edges.select(col("a").as("u"), col("b").as("v"))
         .union(edges.select(col("b").as("u"), col("a").as("v")))
         .repartition(col("u")))
     val src = sym.agg(min(least(col("u"), col("v"))).as("s"))
-    var dist = graft.operators.Checkpoints.scratch(
-      sym.select(col("u").as("node")).distinct()
-        .crossJoin(src)
-        .select(col("node"),
-          when(col("node") === col("s"), lit(0L)).otherwise(lit(null)).as("dist")))
-    var retired = graft.operators.Checkpoints.rddOf(dist)
-    var r = 1
-    var settling = true
-    while (r <= rounds && settling) {
-      val frontier = dist.filter(col("dist") === lit(r - 1L))
+    val dist = fp.loop(rounds)(fp.scratch(
+        sym.select(col("u").as("node")).distinct()
+          .crossJoin(src)
+          .select(col("node"),
+            when(col("node") === col("s"), lit(0L)).otherwise(lit(null)).as("dist")))) {
+      (cur, r) =>
+      val frontier = cur.filter(col("dist") === lit(r - 1L))
         .select(col("node").as("u"))
       // distinct, not groupBy-min: every frontier-adjacent unsettled node
       // gets exactly distance r, but a node with several frontier
@@ -481,26 +476,15 @@ object Graph {
       // early exit at the fixed point: once a round settles NOBODY, every
       // later round is the identity (its frontier is empty), so stopping
       // returns bit-identical results to running the full budget — the
-      // rounds the oracle unrolls past the diameter are no-op CTEs. The
-      // settled-this-round count rides the checkpoint job itself
-      // (observe accumulator, Checkpoints.scratchCount) instead of a
-      // per-round probe job over the just-written snapshot.
-      val (next, nSettled) = graft.operators.Checkpoints.scratchCount(
-        dist.join(hop, Seq("node"), "left")
+      // rounds the oracle unrolls past the diameter are no-op CTEs
+      val (next, settled) = fp.scratchAgg(
+        cur.join(hop, Seq("node"), "left")
           .select(col("node"), coalesce(col("dist"), col("nd")).as("dist")),
-        col("dist") === lit(r.toLong))
-      // `next` is materialized, so the previous snapshot is unreachable —
-      // free it now rather than after an eventual GC+ContextCleaner cycle
-      retired.foreach(_.unpersist(blocking = false))
-      retired = graft.operators.Checkpoints.rddOf(next)
-      dist = next
-      settling = nSettled > 0
-      r += 1
+        count(when(col("dist") === lit(r.toLong), true)))
+      if (settled.getLong(0) == 0) None else Some(next)
     }
-    graft.operators.Checkpoints.rddOf(sym)
-      .foreach(_.unpersist(blocking = false))
-    // the final round's checkpoint backs the returned plan — left live
-    dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
+    // the final round's checkpoint backs the returned plan
+    fp.keep(dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist")))
   }
 
   val q138Sql: String = {
@@ -629,15 +613,12 @@ object Graph {
     * eagerly checkpointed with the previous round's blocks freed (the
     * pageRankSeeded discipline).
     *
-    * SCRATCH LIFECYCLE (r13 ADVICE #4): the FINAL round's aRaw/hRaw (plus
-    * eBase and nodes) back the returned lazy frame and so stay checkpointed
-    * after this function returns — they are reaped by the session's
-    * between-query block sweep (Bench/Verify unpersist all RDDs between
-    * queries). A caller using hits() as a library primitive in a long-lived
-    * session (the PropertySpec loop shape) should call
-    * `Checkpoints.sweepScratch(sc)` after consuming the result, or repeated
-    * calls accumulate dead localCheckpoint blocks. */
-  def hits(rawEdges: DataFrame, rounds: Int): DataFrame = {
+    * SCRATCH LIFECYCLE: the rounds run through [[graft.operators.Fixpoint]].
+    * It frees the edge copy and every round but the last before returning;
+    * `nodes` and the final round's aRaw/hRaw back the returned lazy frame
+    * and stay checkpointed until the caller's block sweep or the
+    * ContextCleaner reaps them. */
+  def hits(rawEdges: DataFrame, rounds: Int): DataFrame = Fixpoint.run { fp =>
     // the edge DISCOVERY plan (a corpus-wide window + groupBy upstream) is
     // materialized exactly once — a first cut hung three consumers off the
     // raw plan and re-ran the discovery three times (two-thirds of the
@@ -647,8 +628,8 @@ object Graph {
     // (×64: 57 s vs 23 s) — the checkpoint's partitioning metadata does
     // not survive to the aggregate planner, so the copies bought nothing
     // and cost two extra |E|-row checkpoint writes.
-    val eBase = Checkpoints.scratch(rawEdges)
-    val nodes = Checkpoints.scratch(
+    val eBase = fp.scratch(rawEdges)
+    val nodes = fp.scratch(
       eBase.select(col("src").as("node"))
         .union(eBase.select(col("dst").as("node"))).distinct())
     // score frames stay SPARSE through the rounds: a node absent from the
@@ -662,23 +643,20 @@ object Graph {
     // aggregate twice (once under the max, once under the checkpoint) —
     // measured 9.0 s at ×10 vs this shape's, on the same graph where the
     // 5-round q124 costs 2.2 s.
-    var hub: DataFrame = nodes.withColumn("h", lit(1000000L))
-    var auth: DataFrame = null
-    var retired: Seq[DataFrame] = Nil
+    //
     // the renormalizing MAX rides each half-round's checkpoint job as an
-    // observe accumulator (Checkpoints.scratchAgg) and enters the next
-    // plan as a LITERAL — the q30 parameter-fetch pattern. The old shape
-    // paid a 1-row max job + a broadcast crossJoin per half-round (6 of
-    // each per q267 execution) for the same number.
-    def rawMax(df: DataFrame): (DataFrame, Long) = {
-      val (out, row) = Checkpoints.scratchAgg(df,
-        Seq(greatest(coalesce(max(col("v")), lit(1L)), lit(1L)).as("mx")))
-      (out, row.map(_.getAs[Long]("mx")).getOrElse(
-        out.agg(greatest(max(col("v")), lit(1L))).head().getLong(0)))
+    // observe accumulator and enters the next plan as a LITERAL — the q30
+    // parameter-fetch pattern. The old shape paid a 1-row max job + a
+    // broadcast crossJoin per half-round (6 of each per q267 execution)
+    // for the same number.
+    def renormed(df: DataFrame, out: String): DataFrame = {
+      val (raw, row) = fp.scratchAgg(df,
+        greatest(coalesce(max(col("v")), lit(1L)), lit(1L)).as("mx"))
+      raw.select(col("node"), expr(s"v * 1000000 div ${row.getLong(0)}").as(out))
     }
-    def renorm(raw: DataFrame, mx: Long, out: String): DataFrame =
-      raw.select(col("node"), expr(s"v * 1000000 div $mx").as(out))
-    for (_ <- 1 to rounds) {
+    val (hub, auth) = fp.loop(rounds)(
+        (nodes.withColumn("h", lit(1000000L)), null: DataFrame)) {
+      case ((prevHub, _), _) =>
       // the ≤|V| score frame is BROADCAST into the edge blocks: scratch
       // frames carry no useful size stats, so an unhinted join planned as
       // a sort-merge that re-sorted all |E| edges EVERY half-round
@@ -687,25 +665,20 @@ object Graph {
       // recurrence that is broadcastable by construction; a graph whose
       // NODE table outgrows executor memory needs the co-partitioned
       // variant instead, and that is a different declared regime.
-      val (aRaw, aMx) = rawMax(
-        eBase.join(broadcast(hub.select(col("node").as("src"), col("h"))),
+      val nextAuth = renormed(
+        eBase.join(broadcast(prevHub.select(col("node").as("src"), col("h"))),
             Seq("src"))
           .groupBy(col("dst").as("node"))
-          .agg(sum(expr("wt * h")).as("v")))
-      val nextAuth = renorm(aRaw, aMx, "a")
-      val (hRaw, hMx) = rawMax(
+          .agg(sum(expr("wt * h")).as("v")), "a")
+      val nextHub = renormed(
         eBase.join(broadcast(
             nextAuth.select(col("node").as("dst"), col("a"))), Seq("dst"))
           .groupBy(col("src").as("node"))
-          .agg(sum(expr("wt * a")).as("v")))
-      val nextHub = renorm(hRaw, hMx, "h")
-      retired.foreach(f =>
-        Checkpoints.rddOf(f).foreach(_.unpersist(blocking = false)))
-      retired = Seq(aRaw, hRaw)
-      auth = nextAuth; hub = nextHub
+          .agg(sum(expr("wt * a")).as("v")), "h")
+      Some((nextHub, nextAuth))
     }
-    nodes.join(auth, Seq("node"), "left").join(hub, Seq("node"), "left")
-      .na.fill(0L, Seq("a", "h"))
+    fp.keep(nodes.join(auth, Seq("node"), "left").join(hub, Seq("node"), "left")
+      .na.fill(0L, Seq("a", "h")))
   }
 
   /** q267 HITS hubs & authorities (new r13) — the second classic link-
@@ -796,19 +769,16 @@ object Graph {
     * round shuffles up to the undirected edge count where a PageRank
     * round map-combines to |V|; measured ~2.7–3.0× q124-per-round at
     * ×10/×30 (same JVM, `SCALING_r14.json`), the inherent price of
-    * label-valued votes. Per-round score frames are eagerly checkpointed and the
-    * previous round's retired one sweep later (the pageRankSeeded
-    * discipline); callers outside the bench sweep should
-    * `Checkpoints.sweepScratch` after consuming the result. */
-  /** @param inputMaterialized callers whose edge frame is ALREADY a
-    *        materialized scratch checkpoint (q305 shares one with its
-    *        modularity pass) pass true to skip the redundant copy; the
-    *        default re-materializes arbitrary (possibly expensive) caller
-    *        lineage exactly once. */
-  def labelPropagation(rawEdges: DataFrame, rounds: Int,
-      inputMaterialized: Boolean = false): DataFrame = {
-    val eDir =
-      if (inputMaterialized) rawEdges else Checkpoints.scratch(rawEdges)
+    * label-valued votes. The rounds run through [[graft.operators.Fixpoint]]:
+    * per-round label frames are eagerly checkpointed and freed once the next
+    * round has materialized; the edge copy and node catalog are freed
+    * before returning, and only the final round's label frame, which backs
+    * the result, stays checkpointed. An edge frame that already is a bare
+    * checkpoint (q305 shares one with its modularity pass) is read as is,
+    * not copied. */
+  def labelPropagation(rawEdges: DataFrame, rounds: Int): DataFrame =
+    Fixpoint.run { fp =>
+    val eDir = fp.scratch(rawEdges)
     // the undirected frame stays LAZY on purpose (r17; the q305 und lesson
     // generalized): its union is a pair of projections over eDir's
     // materialized blocks, so each round reads the |E| checkpoint twice —
@@ -819,10 +789,8 @@ object Graph {
     val e = eDir.select(col("src").as("node"), col("dst").as("nbr"), col("wt"))
       .union(eDir.select(col("dst").as("node"), col("src").as("nbr"),
         col("wt")))
-    val nodes = Checkpoints.scratch(e.select("node").distinct())
-    var lbl: DataFrame = nodes.withColumn("lbl", col("node"))
-    var retired: Seq[DataFrame] = Nil
-    for (_ <- 1 to rounds) {
+    val nodes = fp.scratch(e.select("node").distinct())
+    fp.keep(fp.loop(rounds)(nodes.withColumn("lbl", col("node"))) { (lbl, _) =>
       // every node has >= 1 incident edge by construction (nodes derive
       // from edges), so the vote aggregate covers all nodes — no left join.
       // The round checkpoints the <=|V| LABEL frame, with the argmax fused
@@ -833,19 +801,14 @@ object Graph {
       // re-ran the argmax aggregate from the vote blocks. Checkpointing
       // past the argmax writes ~0.9 MB/round, runs the argmax exactly
       // once, and hands consumers a materialized |V|-row frame).
-      val next = Checkpoints.scratch(
+      Some(fp.scratch(
         e.join(broadcast(lbl.select(col("node").as("nbr"), col("lbl"))),
             Seq("nbr"))
           .groupBy("node", "lbl").agg(sum(col("wt")).as("w"))
           .groupBy("node")
           .agg(min(struct((-col("w")).as("nw"), col("lbl").as("l"))).as("b"))
-          .select(col("node"), col("b.l").as("lbl")))
-      retired.foreach(f =>
-        Checkpoints.rddOf(f).foreach(_.unpersist(blocking = false)))
-      retired = Seq(next)
-      lbl = next
-    }
-    lbl
+          .select(col("node"), col("b.l").as("lbl"))))
+    })
   }
 
   /** q272 label-propagation communities (new r14) — the third classic
@@ -1002,15 +965,15 @@ object Graph {
     // (r17) makes the discovery itself once-per-session, and this scratch
     // copy keeps the 3 modularity consumers + 3 LPA rounds on raw-row
     // blocks instead of repeated CachedBatch decompression.
-    // inputMaterialized: the LPA kernel must NOT take a second checkpoint
-    // copy of this very frame (the r16 shape did — one redundant |E| write
-    // per execution). The undirected frame itself stays LAZY on purpose:
+    // The LPA kernel reads this bare checkpoint as is instead of taking a
+    // second copy (the r16 shape did — one redundant |E| write per
+    // execution). The undirected frame itself stays LAZY on purpose:
     // its union is free on top of the materialized edges, and an A/B at
     // ×10 measured eager-checkpointing the 2|E| frame SLOWER (min 31.4 vs
     // 18.8 s — block-store pressure beats the cheap re-read) — the r16
     // lesson that scratch is for expensive lineage, not every shared frame.
     val edges = Checkpoints.scratch(transitionEdges(spark, dir))
-    val lbl = labelPropagation(edges, rounds = 3, inputMaterialized = true)
+    val lbl = labelPropagation(edges, rounds = 3)
     val und = edges
       .select(col("src").as("node"), col("dst").as("nbr"), col("wt"))
       .union(edges.select(col("dst").as("node"), col("src").as("nbr"),
@@ -1074,75 +1037,61 @@ object Graph {
     * Scale shape: the undirected distinct-pair frame is checkpointed once;
     * each round is one alive-semi-join pair prune (two id-keyed joins), one
     * map-combined degree aggregate, and one 1-row census read — Θ(rounds·
-    * |E|) with |V|-bounded shuffles, frames shrinking monotonically; per-
-    * round frames are eagerly checkpointed and retired one round late (the
-    * [[labelPropagation]] discipline). The census rows themselves are
-    * driver-side (≤ rounds tuples), not a collect of data rows. */
+    * |E|) with |V|-bounded shuffles, frames shrinking monotonically; the
+    * rounds run through [[graft.operators.Fixpoint]]. The census rows are
+    * driver-side (≤ rounds tuples), not a collect of data rows, so no
+    * checkpoint outlives the call. */
   def kCoreCensus(spark: SparkSession, rawEdges: DataFrame, k0: Option[Int],
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = Fixpoint.run { fp =>
     import spark.implicits._
-    val eDir = Checkpoints.scratch(rawEdges.select("src", "dst"))
-    // row counts ride the checkpoint jobs (observe accumulators) instead
-    // of separate counting jobs over the just-written blocks
-    val (und0, nUnd) = Checkpoints.scratchCount(
-      eDir.select(col("src").as("node"), col("dst").as("nbr"))
-        .union(eDir.select(col("dst").as("node"), col("src").as("nbr")))
-        .distinct(), lit(true))
-    var und = und0
-    val (alive0, nAlive0) =
-      Checkpoints.scratchCount(und.select("node").distinct(), lit(true))
-    var alive = alive0
-    var nAlive = nAlive0
-    // mean degree = |und rows| div |V| (und holds one row per directed
-    // distinct-neighbor incidence, so its count IS Σdeg)
-    val k: Long = k0.map(_.toLong).getOrElse(
-      if (nAlive == 0L) 1L else nUnd / nAlive)
-    var retired: Seq[DataFrame] = Nil
-    val census = Seq.newBuilder[(Long, Long, Long, Long, Long)]
-    var r = 1
-    var fixed = false
-    while (r <= rounds && !fixed) {
+    val eDir = fp.scratch(rawEdges.select("src", "dst"))
+    var k = 0L
+    var nAlive = 0L
+    val census = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Long, Long, Long, Long)]
+    fp.loop(rounds)({
+      // row counts ride the checkpoint jobs (observe accumulators) instead
+      // of separate counting jobs over the just-written blocks
+      val (und0, nUnd) = fp.scratchAgg(
+        eDir.select(col("src").as("node"), col("dst").as("nbr"))
+          .union(eDir.select(col("dst").as("node"), col("src").as("nbr")))
+          .distinct(), count(lit(1)))
+      val (alive0, nAlive0) =
+        fp.scratchAgg(und0.select("node").distinct(), count(lit(1)))
+      nAlive = nAlive0.getLong(0)
+      // mean degree = |und rows| div |V| (und holds one row per directed
+      // distinct-neighbor incidence, so its count IS Σdeg)
+      k = k0.map(_.toLong).getOrElse(
+        if (nAlive == 0L) 1L else nUnd.getLong(0) / nAlive)
+      (und0, alive0)
+    }) { case ((und, alive), r) =>
       val deg = und.groupBy("node").agg(count(lit(1)).as("deg"))
       // the removal census (count + id-sum) rides the removed frame's
       // checkpoint job via observe — no per-round census job
-      val (removed, crRow) = Checkpoints.scratchAgg(
+      val (removed, cr) = fp.scratchAgg(
         alive.join(deg.filter(col("deg") >= k).select("node"),
           Seq("node"), "left_anti"),
-        Seq(count(lit(1)).as("n"),
-          coalesce(sum(col("node")), lit(0L)).as("s")))
-      val (nRem, remSum) = crRow match {
-        case Some(cr) => (cr.getAs[Long]("n"), cr.getAs[Long]("s"))
-        case None =>
-          val cr = removed.agg(count(lit(1)),
-            coalesce(sum(col("node")), lit(0L))).head()
-          (cr.getLong(0), cr.getLong(1))
-      }
-      if (nRem == 0L) {
-        fixed = true
-        Checkpoints.rddOf(removed).foreach(_.unpersist(blocking = false))
-      } else {
+        count(lit(1)).as("n"), coalesce(sum(col("node")), lit(0L)).as("s"))
+      val nRem = cr.getLong(0)
+      if (nRem == 0L) None
+      else {
         nAlive -= nRem
-        census += ((r.toLong, k, nRem, remSum, nAlive))
-        val aliveNext = Checkpoints.scratch(
+        census += ((r.toLong, k, nRem, cr.getLong(1), nAlive))
+        val aliveNext = fp.scratch(
           alive.join(removed, Seq("node"), "left_anti"))
-        val undNext = Checkpoints.scratch(
+        val undNext = fp.scratch(
           und.join(removed, Seq("node"), "left_anti")
             .join(removed.select(col("node").as("nbr")),
               Seq("nbr"), "left_anti")
             .select("node", "nbr"))
-        retired.foreach(f =>
-          Checkpoints.rddOf(f).foreach(_.unpersist(blocking = false)))
-        retired = Seq(und, alive, removed)
-        und = undNext; alive = aliveNext
-        r += 1
+        Some((undNext, aliveNext))
       }
     }
     // identity tail: the fixed point reached before the budget — the
     // remaining rounds remove nothing by definition, so synthesize them
-    while (r <= rounds) {
-      census += ((r.toLong, k, 0L, 0L, nAlive)); r += 1
-    }
-    census.result()
+    for (r <- census.size + 1 to rounds)
+      census += ((r.toLong, k, 0L, 0L, nAlive))
+    census.toSeq
       .toDF("round", "k", "n_removed", "removed_id_sum", "n_alive")
   }
 

@@ -2504,12 +2504,12 @@ object Training {
   /** The MM iteration of [[q287]], generalized to SNAPSHOT the strength
     * frame after selected rounds (r14 VERDICT #6 — q296 prices the 3-round
     * approximation against a 5-round run the way q269 priced q252's
-    * recall). Returns (np, round → γ frame); snapshot frames stay
-    * scratch-persisted, intermediate rounds are retired as before. */
+    * recall). Returns (np, round → γ frame). The rounds run through
+    * [[graft.operators.Fixpoint]]: the np and snapshot frames stay
+    * checkpointed, every other round and the pair-count frame are freed. */
   private[graft] def bradleyTerryFit(pp: DataFrame, snapshots: Seq[Int])
-      : (DataFrame, Map[Int, DataFrame]) = {
-    val S = graft.operators.Checkpoints
-    val w = S.scratch(pp.groupBy(col("chosen").as("i"), col("rejected").as("j"))
+      : (DataFrame, Map[Int, DataFrame]) = graft.operators.Fixpoint.run { fp =>
+    val w = fp.scratch(pp.groupBy(col("chosen").as("i"), col("rejected").as("j"))
       .agg(count(lit(1)).as("w")))
     // nij saturates at 10⁸ comparisons per pair (declared evidence cap,
     // identical in the oracle): the MM term nij·10¹⁰ wraps int64 past
@@ -2519,15 +2519,15 @@ object Training {
     // Residual declared ceiling: den sums the per-opponent terms, so an
     // item needs ~9.2e8 TOTAL capped comparisons against near-zero-γ
     // opponents to wrap — the same q238-class bound the scaladoc states.
-    val np = S.scratch(w.select("i", "j", "w")
+    val np = fp.keep(fp.scratch(w.select("i", "j", "w")
       .union(w.select(col("j").as("i"), col("i").as("j"), col("w")))
-      .groupBy("i", "j").agg(least(sum("w"), lit(100000000L)).as("nij")))
+      .groupBy("i", "j").agg(least(sum("w"), lit(100000000L)).as("nij"))))
     val wins = np.select("i").distinct()
       .join(w.groupBy("i").agg(sum("w").as("wins")), Seq("i"), "left")
       .na.fill(0L, Seq("wins"))
-    var g = S.scratch(wins.withColumn("gamma", lit(1000000L)))
     val snaps = scala.collection.mutable.Map.empty[Int, DataFrame]
-    (1 to snapshots.max).foreach { r =>
+    fp.loop(snapshots.max)(fp.scratch(wins.withColumn("gamma", lit(1000000L)))) {
+      (g, r) =>
       // the ≤|items| strength frame is BROADCAST into the pair blocks (the
       // hits/labelPropagation regime argument: the item catalog is bounded
       // by construction; scratch frames carry no useful size stats, so the
@@ -2540,7 +2540,6 @@ object Training {
         .withColumn("t",
           expr("nij * 10000000000 div greatest(1, gamma + gj)"))
         .groupBy("i").agg(sum("t").as("den"))
-      val prev = g
       // the 10^12 ceiling applies to graw itself, not only to the
       // normalized gamma: with truncating division a large-γ round can
       // collapse den to 0 (every term nij·10^10 div (γi+γj) rounds down),
@@ -2554,29 +2553,18 @@ object Training {
       // per round for two scalars. γ stays a lazy projection over the
       // checkpointed raw blocks, so consumers re-run only the projection.
       // Same fixed-point algebra: div on non-negative int64 ≡ Scala /.
-      val (graw, mrow) = S.scratchAgg(
+      val (graw, m) = fp.scratchAgg(
         g.select("i", "wins").join(den, Seq("i"))
           .withColumn("graw", expr(
             "least(1000000000000, wins * 10000000000 div greatest(1, den))"))
           .select("i", "wins", "graw"),
-        Seq(coalesce(sum(col("graw")), lit(0L)).as("s"),
-          count(lit(1)).as("c")))
-      val meang: Long = mrow match {
-        case Some(row) => math.max(1L,
-          row.getAs[Long]("s") / math.max(1L, row.getAs[Long]("c")))
-        case None =>
-          val row = graw.agg(coalesce(sum(col("graw")), lit(0L)),
-            count(lit(1))).head()
-          math.max(1L, row.getLong(0) / math.max(1L, row.getLong(1)))
-      }
-      g = graw.withColumn("gamma",
+        coalesce(sum(col("graw")), lit(0L)).as("s"), count(lit(1)).as("c"))
+      val meang = math.max(1L, m.getLong(0) / math.max(1L, m.getLong(1)))
+      val next = graw.withColumn("gamma",
           expr(s"least(1000000000000, graw * 1000000 div $meang)"))
         .select("i", "wins", "gamma")
-      // a snapshot round's frame must outlive the loop — retire only
-      // non-snapshot predecessors
-      if (!snaps.valuesIterator.exists(_ eq prev))
-        S.rddOf(prev).foreach(_.unpersist(blocking = false))
-      if (snapshots.contains(r)) snaps(r) = g
+      if (snapshots.contains(r)) snaps(r) = fp.keep(next)
+      Some(next)
     }
     (np, snaps.toMap)
   }
